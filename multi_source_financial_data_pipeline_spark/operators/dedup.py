@@ -358,62 +358,47 @@ def min_label_components(
     label table (against the edge list, then itself). `localCheckpoint` cuts
     lineage so the plan doesn't grow exponentially with rounds.
 
-    Small-graph fast path (r19, guide §1.2/§3.1): when the edge list fits
-    the session's broadcast budget — the same size class the planner
-    ships to every executor for a broadcast join, so by definition
-    driver-collectable — the component minimum is computed locally by
-    min-label union-find (union by smaller root + path compression) in
-    ONE collect job instead of O(log diameter) shuffle rounds, each of
-    which costs two joins, a checkpoint and a convergence count. The
-    union-find result IS the loop's fixpoint (every node labeled with
-    its component minimum), so downstream values are identical; above
-    the budget (or with broadcasting disabled) the distributed loop runs
-    unchanged. Threshold from spark.sql.autoBroadcastJoinThreshold at
-    ~16 bytes/edge — conf-driven, not a local-mode constant."""
-    e_plan = edges.select(F.col(id_col).alias("src"), F.col(nb_col).alias("dst"))
+    Small-graph fast path: when the edge list fits the session's broadcast
+    budget (`similarity._materialize`, ~16 bytes/edge) it is collected and
+    labeled by min-label union-find (union by smaller root + path
+    compression) — the loop's own fixpoint, in one collect instead of
+    O(log diameter) shuffle rounds. Either way the edge list is
+    materialized once, so its upstream (LSH banding + Jaccard
+    verification) never runs per round."""
     from multi_source_financial_data_pipeline_spark.operators.similarity import (
-        _broadcast_bytes_threshold,
+        _materialize,
     )
-    max_local_edges = _broadcast_bytes_threshold(edges.sparkSession) // 16
-    if max_local_edges > 0:
-        # limit+collect probes AND fetches in one job: a result within the
-        # budget is by construction complete (the limit never truncated),
-        # and the driver never holds more than budget+1 edge rows
-        head = e_plan.limit(max_local_edges + 1).collect()
-        if len(head) <= max_local_edges:
-            parent: dict = {}
 
-            def find(x):
-                while parent[x] != x:
-                    parent[x] = parent[parent[x]]
-                    x = parent[x]
-                return x
+    e_plan = edges.select(F.col(id_col).alias("src"), F.col(nb_col).alias("dst"))
+    fits, e = _materialize(e_plan, 16)
+    if fits:
+        parent: dict = {}
 
-            for r in head:
-                a, b = r["src"], r["dst"]
-                parent.setdefault(a, a)
-                parent.setdefault(b, b)
-                ra, rb = find(a), find(b)
-                if ra != rb:
-                    if rb < ra:
-                        ra, rb = rb, ra
-                    parent[rb] = ra  # min root wins -> component minimum
-            id_type = e_plan.schema["src"].dataType
-            out_schema = T.StructType(
-                [
-                    T.StructField("id", id_type, True),
-                    T.StructField("lbl", id_type, True),
-                ]
-            )
-            return edges.sparkSession.createDataFrame(
-                [(x, find(x)) for x in parent], schema=out_schema
-            )
-    # big-graph path: materialize the edge list once — every round joins
-    # against it, and without this the whole upstream pipeline (LSH
-    # banding + Jaccard verification) would be re-executed per iteration.
-    # Non-eager (r19): persists on first use inside round 1's convergence
-    # job instead of burning a standalone job before the loop starts.
-    e = e_plan.localCheckpoint(eager=False)
+        def find(x):
+            while parent[x] != x:
+                parent[x] = parent[parent[x]]
+                x = parent[x]
+            return x
+
+        for r in e.collect():
+            a, b = r["src"], r["dst"]
+            parent.setdefault(a, a)
+            parent.setdefault(b, b)
+            ra, rb = find(a), find(b)
+            if ra != rb:
+                if rb < ra:
+                    ra, rb = rb, ra
+                parent[rb] = ra  # min root wins -> component minimum
+        id_type = e_plan.schema["src"].dataType
+        out_schema = T.StructType(
+            [
+                T.StructField("id", id_type, True),
+                T.StructField("lbl", id_type, True),
+            ]
+        )
+        return edges.sparkSession.createDataFrame(
+            [(x, find(x)) for x in parent], schema=out_schema
+        )
     labels = (
         e.select(F.col("src").alias("id"))
         .union(e.select(F.col("dst").alias("id")))
@@ -443,10 +428,8 @@ def min_label_components(
         jump = stepped.select(
             F.col("id").alias("jid"), F.col("lbl").alias("jlbl")
         )
-        # non-eager: the convergence count below materializes the
-        # checkpoint in the SAME job — eager burned two jobs per round
-        # (checkpoint count() + convergence count(); guide §1.2: fixed
-        # per-job cost dominates these label-table rounds)
+        # non-eager: the convergence count below materializes it in the
+        # same job, one job per round instead of two
         new_labels = (
             stepped.join(jump, stepped["lbl"] == jump["jid"])
             .select("id", F.col("jlbl").alias("lbl"), "old_lbl")

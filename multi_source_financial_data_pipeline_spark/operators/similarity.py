@@ -10,67 +10,51 @@ with sign-random-hyperplane LSH so candidate generation is linear-ish; at
 100 TB you additionally pre-partition by bucket so repeated queries touch one
 partition (an IVF coarse quantizer has the same plan shape: bucket by nearest
 centroid, probe a few buckets).
+
+Vector expressions are SQL text (`fold_sum`, `dot`, `sq_norm`, `sq_dist`,
+`cos_from_norms`, `_best_cells`, `_subvectors`) parsed once with ``F.expr``:
+a parse is one py4j call, while the same tree built through the Column DSL
+costs one call per node. Caller-supplied column names enter the SQL only
+through `_ident`.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window, functions as F
+from pyspark.sql import Column, DataFrame, Observation, Window, functions as F
 
 _ZERO = "cast(0.0 as double)"
 
 
-#: Why every helper below has a STRING fast path (r19, guide §1.2/§7.3):
-#: building one higher-order function through the Column DSL costs ~27 ms
-#: of py4j round-trips (measured: `dot` 26.9 ms, `_best_cells` 58.4 ms),
-#: and the ANN family constructs dozens per query — plan CONSTRUCTION was
-#: ~2.5 s of a 7.6 s pq_recall. Parsing the SAME expression from one SQL
-#: string is ~0.6 ms and yields the identical Catalyst tree (verified:
-#: bit-equal results; the full oracle-parity suite pins exactness), so
-#: call sites that operate on plain column names pass strings; sites whose
-#: children are lambda variables or computed Columns keep the DSL path.
-def _fold_sum_sql(arr: str) -> str:
+def _ident(name: str) -> str:
+    """A column name as a backtick-quoted SQL identifier."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def fold_sum(arr: str) -> str:
+    """Left-fold sum with 0.0 seed — same float-op order as DuckDB's
+    list_reduce, so results are bit-identical."""
     return f"aggregate({arr}, {_ZERO}, (acc, x) -> acc + x)"
 
 
-def _dot_sql(a: str, b: str) -> str:
-    return _fold_sum_sql(f"zip_with({a}, {b}, (x, y) -> x * y)")
+def dot(a: str, b: str) -> str:
+    return fold_sum(f"zip_with({a}, {b}, (x, y) -> x * y)")
 
 
-def _sq_norm_sql(a: str) -> str:
-    return _fold_sum_sql(f"transform({a}, x -> x * x)")
+def sq_norm(a: str) -> str:
+    return fold_sum(f"transform({a}, x -> x * x)")
 
 
-def _sq_dist_sql(a: str, b: str) -> str:
-    return _fold_sum_sql(f"zip_with({a}, {b}, (x, y) -> (x - y) * (x - y))")
+def sq_dist(a: str, b: str) -> str:
+    """Squared L2 distance as the same left fold as `dot` — bit-identical
+    to an unrolled left-associative sum in any engine."""
+    return fold_sum(f"zip_with({a}, {b}, (x, y) -> (x - y) * (x - y))")
 
 
-def _fold_sum(arr: Column) -> Column:
-    """Left-fold sum with 0.0 seed — same float-op order as DuckDB's
-    list_reduce, so results are bit-identical."""
-    return F.aggregate(arr, F.expr(_ZERO), lambda acc, x: acc + x)
-
-
-def dot(a: Column | str, b: Column | str) -> Column:
-    if isinstance(a, str) and isinstance(b, str):
-        return F.expr(_dot_sql(a, b))
-    return _fold_sum(F.zip_with(a, b, lambda x, y: x * y))
-
-
-def sq_norm(a: Column | str) -> Column:
-    if isinstance(a, str):
-        return F.expr(_sq_norm_sql(a))
-    return _fold_sum(F.transform(a, lambda x: x * x))
-
-
-def cosine(a: Column | str, b: Column | str) -> Column:
-    """cos = dot / sqrt(|a|² * |b|²), all double arithmetic; null for a
-    zero vector (nullif divisor — ANSI-safe, mirrored in the oracles)."""
-    if isinstance(a, str) and isinstance(b, str):
-        return F.expr(
-            f"{_dot_sql(a, b)} / nullif(sqrt({_sq_norm_sql(a)} *"
-            f" {_sq_norm_sql(b)}), cast(0.0 as double))"
-        )
-    return dot(a, b) / F.nullif(F.sqrt(sq_norm(a) * sq_norm(b)), F.lit(0.0))
+def cos_from_norms(a: str, b: str, a_norm: str, b_norm: str) -> str:
+    """cos = dot / sqrt(|a|² * |b|²) from precomputed squared norms, all
+    double arithmetic; null for a zero vector (nullif divisor — ANSI-safe,
+    mirrored in the oracles)."""
+    return f"{dot(a, b)} / nullif(sqrt({a_norm} * {b_norm}), {_ZERO})"
 
 
 def _as_double(col: str) -> Column:
@@ -78,15 +62,22 @@ def _as_double(col: str) -> Column:
 
 
 def _as_double_sql(col: str) -> str:
-    return f"cast({col} as array<double>)"
+    return f"cast({_ident(col)} as array<double>)"
 
 
-def sq_dist(a: Column | str, b: Column | str) -> Column:
-    """Squared L2 distance as the same left fold as `dot` — bit-identical
-    to an unrolled left-associative sum in any engine."""
-    if isinstance(a, str) and isinstance(b, str):
-        return F.expr(_sq_dist_sql(a, b))
-    return _fold_sum(F.zip_with(a, b, lambda x, y: (x - y) * (x - y)))
+def _subvectors(vec: str, m: int, sub: int) -> str:
+    """``vec`` split into its ``m`` contiguous sub-vectors of width ``sub``."""
+    return f"transform(sequence(0, {m - 1}), s -> slice({vec}, s * {sub} + 1, {sub}))"
+
+
+def _query_vectors(queries: DataFrame, query_id_col: str, vec_col: str) -> DataFrame:
+    """(query_id, qv, qn): the query batch as double vectors and their
+    squared norms."""
+    return queries.select(
+        F.col(query_id_col).alias("query_id"),
+        _as_double(vec_col).alias("qv"),
+        F.expr(sq_norm(_as_double_sql(vec_col))).alias("qn"),
+    )
 
 
 #: per-component quantization scale for order-proof centroid means: summing
@@ -127,9 +118,9 @@ def _km_assign(e: DataFrame, cents_df: DataFrame) -> DataFrame:
     percell = cents_df.agg(
         F.array_sort(F.collect_list(F.struct("cell", "cv"))).alias("cs")
     )
-    best = F.expr(  # parse path — identical tree, ~60 ms/call cheaper
+    best = F.expr(
         "array_sort(transform(cs, c -> named_struct("
-        f"'d', round({_sq_dist_sql('v', 'c.cv')}, 6), 'cell', c.cell)))"
+        f"'d', round({sq_dist('v', 'c.cv')}, 6), 'cell', c.cell)))"
     )[0]
     return e.join(F.broadcast(percell)).select(
         "vec_id",
@@ -214,7 +205,7 @@ def kmeans_refine(
         F.sum(F.col("d").cast("decimal(20,6)")).cast("double").alias("inertia"),
     )
     norms = cents.select(
-        "cell", F.round(F.sqrt(sq_norm(F.col("cv"))), 6).alias("centroid_norm")
+        "cell", F.round(F.sqrt(F.expr(sq_norm("cv"))), 6).alias("centroid_norm")
     )
     return out.join(F.broadcast(norms), "cell").select(
         "cell", "n_members", "inertia", "centroid_norm"
@@ -231,12 +222,7 @@ def _pq_subvectors(
     )
     return e.select(
         "vec_id",
-        F.posexplode(
-            F.expr(
-                f"transform(sequence(0, {m - 1}),"
-                f" s -> slice(v, s * {sub} + 1, {sub}))"
-            )
-        ).alias("s", "sv"),
+        F.posexplode(F.expr(_subvectors("v", m, sub))).alias("s", "sv"),
     )
 
 
@@ -255,9 +241,9 @@ def _pq_assign_codes(subs: DataFrame, cents_df: DataFrame) -> DataFrame:
     percell = cents_df.groupBy("s").agg(
         F.array_sort(F.collect_list(F.struct("cell", "cv"))).alias("cs")
     )
-    best = F.expr(  # parse path — identical tree, ~60 ms/call cheaper
+    best = F.expr(
         "array_sort(transform(cs, c -> named_struct("
-        f"'d', round({_sq_dist_sql('sv', 'c.cv')}, 6), 'cell', c.cell)))"
+        f"'d', round({sq_dist('sv', 'c.cv')}, 6), 'cell', c.cell)))"
     )[0]
     return subs.join(F.broadcast(percell), "s").select(
         "vec_id",
@@ -401,7 +387,7 @@ def pq_adc_topk(
     partition-order-dependent.
 
     Scale: the per-query LUT is |q|·m·k rows (broadcast while the batch
-    provably fits the budget — see `_small_query_batch`); the scan
+    fits the broadcast budget — see `_lut_hint`); the scan
     is one broadcast join over the code table (m rows per vector, ints
     only) + a (query, cand) hash aggregate of m partials. At 100 TB the
     code table IS the index — 8 bytes a vector against 512 for the raw
@@ -417,30 +403,20 @@ def pq_adc_topk(
         id_col=id_col, vec_col=vec_col,
     )
     sub = dim // m
-    q = queries.select(
-        F.col(query_id_col).alias("query_id"),
-        _as_double(vec_col).alias("qv"),
-        sq_norm(_as_double_sql(vec_col)).alias("qn"),
-    )
+    # dot_lut is query-proportional (|q|·m·k rows), hinted only within the
+    # budget; norm_lut is a codebook constant, always hinted
+    hb, queries = _lut_hint(queries, m * k_codebook)
+    q = _query_vectors(queries, query_id_col, vec_col)
     qsub = q.select(
         "query_id",
         "qn",
-        F.posexplode(
-            F.expr(
-                f"transform(sequence(0, {m - 1}),"
-                f" s -> slice(qv, s * {sub} + 1, {sub}))"
-            )
-        ).alias("s", "qsv"),
+        F.posexplode(F.expr(_subvectors("qv", m, sub))).alias("s", "qsv"),
     )
     dot_lut = qsub.join(F.broadcast(cents), "s").select(
         "query_id", "qn", "s", "cell",
-        dot("qsv", "cv").alias("dp"),
+        F.expr(dot("qsv", "cv")).alias("dp"),
     )
-    norm_lut = cents.select("s", "cell", sq_norm("cv").alias("np"))
-    # dot_lut is QUERY-proportional (|q|·m·k rows) — hinted only while the
-    # batch provably fits the broadcast budget (r14 VERDICT item 3; see
-    # `_small_query_batch`). norm_lut is a codebook constant, always hinted.
-    hb = _lut_hint(queries, m * k_codebook)
+    norm_lut = cents.select("s", "cell", F.expr(sq_norm("cv")).alias("np"))
     parts = (
         codes.join(hb(dot_lut), ["s", "cell"])
         .join(F.broadcast(norm_lut), ["s", "cell"])
@@ -455,8 +431,8 @@ def _adc_fold_rank(parts: DataFrame, k: int) -> DataFrame:
     cosine, rank top-k per query with the module's id tiebreak."""
 
     def _s_fold(value: str) -> Column:
-        return F.expr(  # parse path — identical tree, see module note
-            _fold_sum_sql(
+        return F.expr(
+            fold_sum(
                 f"transform(array_sort(collect_list(struct(s, {value}))),"
                 f" st -> st.{value})"
             )
@@ -492,120 +468,34 @@ def _adc_fold_rank(parts: DataFrame, k: int) -> DataFrame:
 _LUT_ROW_BYTES = 48
 
 
-def _broadcast_bytes_threshold(spark) -> int:
-    """``spark.sql.autoBroadcastJoinThreshold`` in bytes (0 if disabled).
-    Parses the full Spark byte-suffix set (b/k/kb/m/mb/g/gb/t/tb/p/pb,
-    case-insensitive — the same grammar as ``byteStringAsBytes``) and
-    RAISES on anything else: Spark validates the conf value itself, so an
-    unparseable string here means THIS parser is incomplete, and silently
-    defaulting would quietly mis-size every batch-conditional hint
-    (r15 review finding: '1tb' once fell through to the 10MB default)."""
-    raw = str(
-        spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10MB")
-    ).strip().lower()
-    mult = 1
-    for suf, mul in (
-        ("kb", 1 << 10), ("mb", 1 << 20), ("gb", 1 << 30),
-        ("tb", 1 << 40), ("pb", 1 << 50),
-        ("k", 1 << 10), ("m", 1 << 20), ("g", 1 << 30),
-        ("t", 1 << 40), ("p", 1 << 50), ("b", 1),
-    ):
-        if raw.endswith(suf):
-            raw, mult = raw[: -len(suf)], mul
-            break
-    # int(raw), not int(float(raw)): Spark's byteStringAsBytes grammar is
-    # an INTEGER mantissa, and flooring a fractional one here (e.g.
-    # '0.5g' -> 0) would silently disable every batch-conditional hint
-    # instead of hitting the loud-failure path this docstring promises
-    # (r15 ADVICE).
-    try:
-        return max(int(raw) * mult, 0)
-    except ValueError:
-        raise ValueError(
-            "unparseable spark.sql.autoBroadcastJoinThreshold value "
-            f"{raw!r} — extend _broadcast_bytes_threshold's suffix table"
-        ) from None
+def _materialize(df: DataFrame, row_bytes: int) -> tuple[bool, DataFrame]:
+    """Materialize ``df`` once and say whether it fits the broadcast budget.
 
-
-#: memo for `_small_query_batch`: (plan semanticHash, lut rows, byte cap)
-#: -> [verdict, reuses_left]. A serving loop re-probing the SAME batch
-#: plan pays the bounded count job once per _SMALL_BATCH_RECHECK reuses,
-#: not per probe call (r15 VERDICT item 7). Keyed by the resolved-plan
-#: hash so a re-read of changed source data with an identical plan reuses
-#: the verdict — acceptable because the verdict only selects between two
-#: CORRECT plans (hinted vs AQE-chosen); a stale or hash-colliding entry
-#: can cost a broadcast of a batch that grew past the budget, never a
-#: wrong answer. The reuse budget bounds HOW LONG that staleness can
-#: live in a long-running serving process (r16 ADVICE: a True verdict
-#: must not survive unbounded source growth): after _SMALL_BATCH_RECHECK
-#: answered-from-memo calls the entry expires and the next call re-runs
-#: the LIMIT-capped count. `clear_small_batch_memo()` drops everything
-#: eagerly (e.g. after a known bulk load). Unbounded growth is not a
-#: concern: one small entry per distinct probe-batch plan per process.
-_SMALL_BATCH_MEMO: dict[tuple[int, int, int], list] = {}
-
-#: answered-from-memo calls before a verdict must be re-proven. 64 keeps
-#: the steady-state cost at one bounded count job per 65 probe calls
-#: while capping how far a batch can grow past its proven size unnoticed.
-_SMALL_BATCH_RECHECK = 64
-
-
-def clear_small_batch_memo() -> None:
-    """Eagerly invalidate every memoized broadcast-budget verdict — for
-    long-lived serving processes that just changed the data under a
-    probe-batch plan (the TTL above re-proves lazily; this is the
-    immediate form)."""
-    _SMALL_BATCH_MEMO.clear()
-
-
-def _small_query_batch(queries: DataFrame, lut_rows_per_query: int) -> bool:
-    """Decide whether the per-query ADC lookup frames (|q| ·
-    ``lut_rows_per_query`` rows) fit the session's broadcast budget — the
-    statistic Catalyst cannot estimate on its own (the LUT row count is a
-    multiple of the QUERY batch, hidden behind joins and explodes whose
-    size estimates don't compose). One bounded count of the batch (LIMIT
-    cap+1, so an over-cap batch never pays a full count) buys back the
-    zero-exchange hinted plan for every sanely-sized serving batch, while
-    an over-cap batch gets UNhinted joins — AQE picks the strategy and
-    nothing query-proportional is ever pinned into executor memory
-    regardless of batch size (r14 VERDICT item 3: the hints must not be
-    unconditional).
-
-    Cost model (r15 ADVICE): the LIMIT bounds the ROWS the count job
-    returns, not the lineage that produces them — a caller passing an
-    expensive derived query frame pays that lineage here AND again at
-    execution (the frame is not cached). Cheap for this module's
-    filter-of-a-scan batches; callers with expensive derived batches
-    should ``.cache()`` the frame first. Repeat probes of the SAME batch
-    plan skip the job entirely via `_SMALL_BATCH_MEMO`.
-
-    Measured at bench scale (sf0.1 codes, 10-query batch): unconditional
-    unhinting made AQE stage a corpus-side shuffle WRITE before promoting
-    the LUT join back to broadcast (1.3–1.75 s vs the 0.9–1.1 s hinted
-    pin) — the hint is the right plan exactly while the batch is provably
-    under the broadcast budget, and this supplies the proof."""
-    spark = queries.sparkSession
-    budget = _broadcast_bytes_threshold(spark)
-    cap_rows = budget // _LUT_ROW_BYTES
-    cap_q = cap_rows // max(lut_rows_per_query, 1)
-    if cap_q <= 0:
-        return False
-    key = (queries.semanticHash(), lut_rows_per_query, budget)
-    entry = _SMALL_BATCH_MEMO.get(key)
-    if entry is not None and entry[1] > 0:
-        entry[1] -= 1
-        return entry[0]
-    verdict = queries.limit(cap_q + 1).count() <= cap_q
-    _SMALL_BATCH_MEMO[key] = [verdict, _SMALL_BATCH_RECHECK]
-    return verdict
+    The package's one budget-gated eager step: a single job runs ``df``'s
+    upstream into a local checkpoint and counts its rows on the way
+    (``observe``). ``fits`` is true when rows × ``row_bytes`` is within
+    ``spark.sql.autoBroadcastJoinThreshold`` (the size Spark itself ships to
+    every executor, so driver-collectable; -1 disables it). Callers take
+    their driver-side or hinted path when it fits and reuse the same
+    materialized frame when it does not, so neither branch runs the
+    upstream again. Returns ``(fits, frame)``."""
+    seen = Observation()
+    frame = df.observe(seen, F.count(F.lit(1)).alias("n")).localCheckpoint()
+    conf = df.sparkSession._jsparkSession.sessionState().conf()
+    return seen.get["n"] * row_bytes <= conf.autoBroadcastJoinThreshold(), frame
 
 
 def _lut_hint(queries: DataFrame, lut_rows_per_query: int):
-    """``F.broadcast`` when the batch is provably small, identity otherwise
-    (see `_small_query_batch`)."""
-    if _small_query_batch(queries, lut_rows_per_query):
-        return F.broadcast
-    return lambda df: df
+    """``(hint, queries)`` for a query batch whose LUT frames hold |q| ·
+    ``lut_rows_per_query`` rows — a multiple Catalyst cannot estimate
+    through the joins and explodes that build it. Within the broadcast
+    budget the hint is ``F.broadcast`` and the batch stays as given: its
+    filter is what lets dynamic partition pruning skip unprobed cells'
+    files. Over the budget the hint is the identity (AQE picks the join
+    strategy; nothing query-proportional is pinned into executor memory)
+    and the batch is the materialized frame, so its upstream runs once."""
+    fits, frame = _materialize(queries, _LUT_ROW_BYTES * lut_rows_per_query)
+    return (F.broadcast, queries) if fits else ((lambda df: df), frame)
 
 
 def ivfpq_adc_topk(
@@ -654,43 +544,21 @@ def ivfpq_adc_topk(
         F.col(id_col).alias("vec_id"), F.col("cell").alias("ivf_cell")
     )
     seed_row = ivf_seed_row(embeddings, nlist, id_col, vec_col)
-    q = queries.select(
-        F.col(query_id_col).alias("query_id"),
-        _as_double(vec_col).alias("qv"),
-        sq_norm(_as_double_sql(vec_col)).alias("qn"),
-    )
-    probes = (
-        q.join(F.broadcast(seed_row))
-        .select(
-            "query_id",
-            F.explode(
-                F.slice(_best_cells("qv", "qn"), 1, nprobe)
-            ).alias("p"),
-        )
-        .select("query_id", F.col("p")["cell"].alias("ivf_cell"))
-    )
+    # probes and dot_lut are query-proportional (|q|·nprobe and |q|·m·k
+    # rows), hinted only within the budget; norm_lut (m·k rows) always
+    hb, queries = _lut_hint(queries, m * k_codebook)
+    q = _query_vectors(queries, query_id_col, vec_col)
+    probes = _probe_cells(q, seed_row, nprobe, "ivf_cell")
     qsub = q.select(
         "query_id",
         "qn",
-        F.posexplode(
-            F.expr(
-                f"transform(sequence(0, {m - 1}),"
-                f" s -> slice(qv, s * {sub} + 1, {sub}))"
-            )
-        ).alias("s", "qsv"),
+        F.posexplode(F.expr(_subvectors("qv", m, sub))).alias("s", "qsv"),
     )
     dot_lut = qsub.join(F.broadcast(cents), "s").select(
         "query_id", "qn", "s", "code",
-        dot("qsv", "cv").alias("dp"),
+        F.expr(dot("qsv", "cv")).alias("dp"),
     )
-    norm_lut = cents.select("s", "code", sq_norm("cv").alias("np"))
-    # probes and dot_lut are QUERY-proportional (|q|·nprobe and |q|·m·k
-    # rows) — hinted only while the batch provably fits the broadcast
-    # budget (r14 VERDICT item 3: an unconditional hint pins them into
-    # executor memory at ANY batch size, the class r05 purged from
-    # scale-proportional join sides). norm_lut stays unconditionally
-    # hinted: m·k rows, a constant of the codebook budget.
-    hb = _lut_hint(queries, m * k_codebook)
+    norm_lut = cents.select("s", "code", F.expr(sq_norm("cv")).alias("np"))
     parts = (
         codes.join(cells, "vec_id")
         .join(hb(probes), "ivf_cell")
@@ -791,69 +659,42 @@ def ivfpq_residual_adc_topk(
     sub = dim // m
     csub = ctrs.select(
         "ivf_cell",
-        F.posexplode(
-            F.expr(
-                f"transform(sequence(0, {m - 1}),"
-                f" s -> slice(ctr, s * {sub} + 1, {sub}))"
-            )
-        ).alias("s", "csv"),
+        F.posexplode(F.expr(_subvectors("ctr", m, sub))).alias("s", "csv"),
     )
     norm_lut = csub.join(cents, "s").select(
         "ivf_cell",
         "s",
         "code",
-        sq_norm("zip_with(csv, cv, (x, y) -> x + y)").alias(
-            "np"
-        ),
+        F.expr(sq_norm("zip_with(csv, cv, (x, y) -> x + y)")).alias("np"),
     )
     seed_row = (
         centers_row
         if centers_row is not None
         else ivf_seed_row(embeddings, nlist, id_col, vec_col)
     )
-    q = queries.select(
-        F.col(query_id_col).alias("query_id"),
-        _as_double(vec_col).alias("qv"),
-        sq_norm(_as_double_sql(vec_col)).alias("qn"),
-    )
-    probes = (
-        q.join(F.broadcast(seed_row))
-        .select(
-            "query_id",
-            F.explode(
-                F.slice(_best_cells("qv", "qn"), 1, nprobe)
-            ).alias("p"),
-        )
-        .select("query_id", F.col("p")["cell"].alias("ivf_cell"))
-    )
+    # probes / dlut_ctr / dlut_res are query-proportional (|q|·nprobe,
+    # |q|·nprobe·m, |q|·m·k rows), hinted only within the budget;
+    # norm_lut (nlist·m·k rows, index geometry) always
+    hb, queries = _lut_hint(queries, m * k_codebook)
+    q = _query_vectors(queries, query_id_col, vec_col)
+    probes = _probe_cells(q, seed_row, nprobe, "ivf_cell")
     qsub = q.select(
         "query_id",
         "qn",
-        F.posexplode(
-            F.expr(
-                f"transform(sequence(0, {m - 1}),"
-                f" s -> slice(qv, s * {sub} + 1, {sub}))"
-            )
-        ).alias("s", "qsv"),
+        F.posexplode(F.expr(_subvectors("qv", m, sub))).alias("s", "qsv"),
     )
     dlut_res = qsub.join(F.broadcast(cents), "s").select(
         "query_id", "qn", "s", "code",
-        dot("qsv", "cv").alias("dpr"),
+        F.expr(dot("qsv", "cv")).alias("dpr"),
     )
     dlut_ctr = (
         qsub.join(probes, "query_id")
         .join(F.broadcast(csub), ["ivf_cell", "s"])
         .select(
             "query_id", "ivf_cell", "s",
-            dot("qsv", "csv").alias("dpc"),
+            F.expr(dot("qsv", "csv")).alias("dpc"),
         )
     )
-    # probes / dlut_ctr / dlut_res are QUERY-proportional (|q|·nprobe,
-    # |q|·nprobe·m, |q|·m·k rows) — hinted only while the batch provably
-    # fits the broadcast budget (r14 VERDICT item 3; see
-    # `_small_query_batch`). norm_lut stays unconditionally hinted:
-    # nlist·m·k rows, a constant of the index geometry.
-    hb = _lut_hint(queries, m * k_codebook)
     parts = (
         codes.join(cells, "vec_id")
         .join(hb(probes), "ivf_cell")
@@ -889,16 +730,10 @@ def brute_force_topk(
     cand = embeddings.select(
         F.col(id_col).alias("cand_id"),
         _as_double(vec_col).alias("cv"),
-        sq_norm(_as_double_sql(vec_col)).alias("cn"),
+        F.expr(sq_norm(_as_double_sql(vec_col))).alias("cn"),
     )
-    q = queries.select(
-        F.col(query_id_col).alias("query_id"),
-        _as_double(vec_col).alias("qv"),
-        sq_norm(_as_double_sql(vec_col)).alias("qn"),
-    )
-    cos = dot("qv", "cv") / F.nullif(
-        F.sqrt(F.col("qn") * F.col("cn")), F.lit(0.0)
-    )
+    q = _query_vectors(queries, query_id_col, vec_col)
+    cos = F.expr(cos_from_norms("qv", "cv", "qn", "cn"))
     scored = (
         cand.join(F.broadcast(q), F.col("cand_id") != F.col("query_id"))
         .withColumn("cos_sim", F.round(cos, 6))
@@ -1088,7 +923,7 @@ def semdedup_screen(
             {id_col: ids, cell_col: cells_out, "max_prev": max_prev}
         )
 
-    schema = f"{id_col} long, {cell_col} {cell_type}, max_prev double"
+    schema = f"{_ident(id_col)} long, {_ident(cell_col)} {cell_type}, max_prev double"
     from multi_source_financial_data_pipeline_spark.operators.grouped import _fold_partitions
 
     screened = (
@@ -1138,10 +973,7 @@ def lsh_bucket(
     terms = []
     for p, plane in enumerate(planes):
         arr = ", ".join(f"cast({c:.1f} as double)" for c in plane)
-        proj = (
-            f"aggregate(zip_with(cast({vec_col} as array<double>), array({arr}),"
-            f" (x, y) -> x * y), cast(0.0 as double), (acc, z) -> acc + z)"
-        )
+        proj = dot(_as_double_sql(vec_col), f"array({arr})")
         terms.append(
             f"(CASE WHEN {proj} > 0 THEN shiftleft(cast(1 as bigint), {p})"
             f" ELSE cast(0 as bigint) END)"
@@ -1170,18 +1002,16 @@ def lsh_topk(
     cand = b.select(
         F.col(id_col).alias("cand_id"),
         _as_double(vec_col).alias("cv"),
-        sq_norm(_as_double_sql(vec_col)).alias("cn"),
+        F.expr(sq_norm(_as_double_sql(vec_col))).alias("cn"),
         "bucket",
     )
     qb = lsh_bucket(queries, num_planes, dim, seed, query_id_col, vec_col).select(
         F.col(query_id_col).alias("query_id"),
         _as_double(vec_col).alias("qv"),
-        sq_norm(_as_double_sql(vec_col)).alias("qn"),
+        F.expr(sq_norm(_as_double_sql(vec_col))).alias("qn"),
         "bucket",
     )
-    cos = dot("qv", "cv") / F.nullif(
-        F.sqrt(F.col("qn") * F.col("cn")), F.lit(0.0)
-    )
+    cos = F.expr(cos_from_norms("qv", "cv", "qn", "cn"))
     scored = (
         qb.join(cand, ["bucket"])
         .filter(F.col("cand_id") != F.col("query_id"))
@@ -1214,18 +1044,16 @@ def lsh_neardup_pairs(
     a = b.select(
         F.col(id_col).alias("id_a"),
         _as_double(vec_col).alias("va"),
-        sq_norm(_as_double_sql(vec_col)).alias("na"),
+        F.expr(sq_norm(_as_double_sql(vec_col))).alias("na"),
         "bucket",
     )
     c = b.select(
         F.col(id_col).alias("id_b"),
         _as_double(vec_col).alias("vb"),
-        sq_norm(_as_double_sql(vec_col)).alias("nb"),
+        F.expr(sq_norm(_as_double_sql(vec_col))).alias("nb"),
         "bucket",
     )
-    cos = dot("va", "vb") / F.nullif(
-        F.sqrt(F.col("na") * F.col("nb")), F.lit(0.0)
-    )
+    cos = F.expr(cos_from_norms("va", "vb", "na", "nb"))
     return (
         a.join(c, ["bucket"])
         .filter(F.col("id_a") < F.col("id_b"))
@@ -1275,7 +1103,7 @@ def ivf_seed_row(
     seeds = embeddings.filter(F.col(id_col) < nlist).select(
         F.col(id_col).alias("seed_id"), _as_double(vec_col).alias("sv")
     )
-    seeds = seeds.withColumn("sn", sq_norm("sv"))
+    seeds = seeds.withColumn("sn", F.expr(sq_norm("sv")))
     return seeds.agg(
         F.sort_array(F.collect_list(F.struct("seed_id", "sv", "sn"))).alias("seeds")
     )
@@ -1293,42 +1121,40 @@ def centers_seed_row(
     seeds = centers.select(
         F.col(cell_col).cast("long").alias("seed_id"),
         F.col(vec_col).alias("sv"),
-    ).withColumn("sn", sq_norm("sv"))
+    ).withColumn("sn", F.expr(sq_norm("sv")))
     return seeds.agg(
         F.sort_array(F.collect_list(F.struct("seed_id", "sv", "sn"))).alias("seeds")
     )
 
 
-def _best_cells(vec: Column | str, vec_norm: Column | str) -> Column:
-    """Array of (neg_sim, cell) structs vs every seed, sorted best-first.
-    neg_sim = -round(cos, 6) so ascending struct order is (highest cosine,
-    lowest seed id) — the same tiebreak as every top-k in this module; a
-    null cosine (zero vector) sorts last via the +2.0 sentinel. String
-    inputs take the parse path (~60 ms/call of py4j saved — see the
-    module note above); both paths build the identical expression."""
-    if isinstance(vec, str) and isinstance(vec_norm, str):
-        return F.expr(
-            "array_sort(transform(seeds, s -> named_struct("
-            f"'neg_sim', coalesce(-round({_dot_sql(vec, 's.sv')}"
-            f" / nullif(sqrt({vec_norm} * s.sn), cast(0.0 as double)), 6),"
-            " cast(2.0 as double)),"
-            " 'cell', s.seed_id)))"
-        )
-    scored = F.transform(
-        F.col("seeds"),
-        lambda s: F.struct(
-            F.coalesce(
-                -F.round(
-                    dot(vec, s["sv"])
-                    / F.nullif(F.sqrt(vec_norm * s["sn"]), F.lit(0.0)),
-                    6,
-                ),
-                F.lit(2.0),
-            ).alias("neg_sim"),
-            s["seed_id"].alias("cell"),
-        ),
+def _best_cells(vec: str, vec_norm: str, seeds: str = "seeds") -> str:
+    """SQL: the ``seeds`` array of (seed_id, sv, sn) structs scored against
+    ``vec`` as (neg_sim, cell) structs, sorted best-first. neg_sim =
+    -round(cos, 6) so ascending struct order is (highest cosine, lowest
+    seed id) — the same tiebreak as every top-k in this module; a null
+    cosine (zero vector) sorts last via the +2.0 sentinel."""
+    cos = cos_from_norms(vec, "s.sv", vec_norm, "s.sn")
+    return (
+        f"array_sort(transform({seeds}, s -> named_struct("
+        f"'neg_sim', coalesce(-round({cos}, 6), cast(2.0 as double)),"
+        " 'cell', s.seed_id)))"
     )
-    return F.array_sort(scored)
+
+
+def _probe_cells(
+    q: DataFrame, seed_row: DataFrame, nprobe: int, cell: str, *keep: str
+) -> DataFrame:
+    """(query_id, *keep, cell): each `_query_vectors` row fanned out to its
+    ``nprobe`` nearest cells of the broadcast quantizer row."""
+    cols = ["query_id", *keep]
+    return (
+        q.join(F.broadcast(seed_row))
+        .select(
+            *cols,
+            F.explode(F.slice(F.expr(_best_cells("qv", "qn")), 1, nprobe)).alias("p"),
+        )
+        .select(*cols, F.col("p")["cell"].alias(cell))
+    )
 
 
 def ivf_assign(
@@ -1352,9 +1178,9 @@ def ivf_assign(
         else ivf_seed_row(embeddings, nlist, id_col, vec_col)
     )
     e = embeddings.select(F.col(id_col), _as_double(vec_col).alias("v")).withColumn(
-        "vn", sq_norm("v")
+        "vn", F.expr(sq_norm("v"))
     )
-    best = _best_cells("v", "vn")[0]
+    best = F.expr(_best_cells("v", "vn"))[0]
     return (
         e.join(F.broadcast(seed_row))
         .select(
@@ -1397,8 +1223,8 @@ def semdedup_assign(
     supers_row = ivf_seed_row(embeddings, k1, id_col, vec_col)
     seeds = embeddings.filter(F.col(id_col) < nlist).select(
         F.col(id_col).alias("seed_id"), _as_double(vec_col).alias("sv")
-    ).withColumn("sn", sq_norm("sv"))
-    seed_best = _best_cells("sv", "sn")[0]
+    ).withColumn("sn", F.expr(sq_norm("sv")))
+    seed_best = F.expr(_best_cells("sv", "sn"))[0]
     seed_super = (
         seeds.join(F.broadcast(supers_row))
         .select(
@@ -1423,31 +1249,11 @@ def semdedup_assign(
         ).alias("super_groups")
     )
     e = embeddings.select(F.col(id_col), _as_double(vec_col).alias("v")).withColumn(
-        "vn", sq_norm("v")
+        "vn", F.expr(sq_norm("v"))
     )
-    vec_super = _best_cells("v", "vn")[0]["cell"]
-    my_seeds = F.element_at(
-        F.col("super_groups"), (vec_super + F.lit(1)).cast("int")
-    )
-    scored = F.array_sort(
-        F.transform(
-            my_seeds,
-            lambda x: F.struct(
-                F.coalesce(
-                    -F.round(
-                        dot(F.col("v"), x["sv"])
-                        / F.nullif(
-                            F.sqrt(F.col("vn") * x["sn"]), F.lit(0.0)
-                        ),
-                        6,
-                    ),
-                    F.lit(2.0),
-                ).alias("neg_sim"),
-                x["seed_id"].alias("cell"),
-            ),
-        )
-    )
-    best = scored[0]
+    vec_super = f"{_best_cells('v', 'vn')}[0].cell"
+    my_seeds = f"element_at(super_groups, cast({vec_super} + 1 as int))"
+    best = F.expr(_best_cells("v", "vn", seeds=my_seeds))[0]
     return (
         e.join(F.broadcast(supers_row))
         .join(F.broadcast(groups_row))
@@ -1484,22 +1290,9 @@ def ivf_topk(
         F.col("vn").alias("cn"), "cell",
     )
     seed_row = ivf_seed_row(embeddings, nlist, id_col, vec_col)
-    q = queries.select(
-        F.col(query_id_col).alias("query_id"), _as_double(vec_col).alias("qv")
-    ).withColumn("qn", sq_norm("qv"))
-    probes = (
-        q.join(F.broadcast(seed_row))
-        .select(
-            "query_id", "qv", "qn",
-            F.explode(F.slice(_best_cells("qv", "qn"), 1, nprobe)).alias(
-                "probe"
-            ),
-        )
-        .select("query_id", "qv", "qn", F.col("probe")["cell"].alias("cell"))
-    )
-    cos = dot("qv", "cv") / F.nullif(
-        F.sqrt(F.col("qn") * F.col("cn")), F.lit(0.0)
-    )
+    q = _query_vectors(queries, query_id_col, vec_col)
+    probes = _probe_cells(q, seed_row, nprobe, "cell", "qv", "qn")
+    cos = F.expr(cos_from_norms("qv", "cv", "qn", "cn"))
     scored = (
         probes.join(assigned, ["cell"])
         .filter(F.col("cand_id") != F.col("query_id"))
@@ -1604,22 +1397,9 @@ def ivf_topk_probe(
 
     cells = spark.read.parquet(os.path.join(index_dir, "cells"))
     seed_row = spark.read.parquet(os.path.join(index_dir, "quantizer"))
-    q = queries.select(
-        F.col(query_id_col).alias("query_id"), _as_double(vec_col).alias("qv")
-    ).withColumn("qn", sq_norm("qv"))
-    probes = (
-        q.join(F.broadcast(seed_row))
-        .select(
-            "query_id", "qv", "qn",
-            F.explode(F.slice(_best_cells("qv", "qn"), 1, nprobe)).alias(
-                "probe"
-            ),
-        )
-        .select("query_id", "qv", "qn", F.col("probe")["cell"].alias("cell"))
-    )
-    cos = dot("qv", "cv") / F.nullif(
-        F.sqrt(F.col("qn") * F.col("cn")), F.lit(0.0)
-    )
+    q = _query_vectors(queries, query_id_col, vec_col)
+    probes = _probe_cells(q, seed_row, nprobe, "cell", "qv", "qn")
+    cos = F.expr(cos_from_norms("qv", "cv", "qn", "cn"))
     scored = (
         probes.join(cells, ["cell"])
         .filter(F.col("cand_id") != F.col("query_id"))
@@ -2073,46 +1853,23 @@ def pq_topk_probe(
         F.count(F.lit(1)).alias("lut_rows"),
     ).collect()[0]
     m, sub = int(meta["m"]), int(meta["sub"])
-    lut_rows_per_query = int(meta["lut_rows"])  # m·k codebook entries
-    q = queries.select(
-        F.col(query_id_col).alias("query_id"),
-        _as_double(vec_col).alias("qv"),
-        sq_norm(_as_double_sql(vec_col)).alias("qn"),
-    )
-    probes = (
-        q.join(F.broadcast(seed_row))
-        .select(
-            "query_id",
-            F.explode(
-                F.slice(_best_cells("qv", "qn"), 1, nprobe)
-            ).alias("p"),
-        )
-        .select("query_id", F.col("p")["cell"].alias("ivf_cell"))
-    )
+    # probes and dot_lut are query-proportional (|q|·nprobe and |q|·m·k
+    # rows), hinted only within the budget; the probes hint also drives
+    # dynamic partition pruning of codes/, which an over-budget batch
+    # (probing most cells anyway) forgoes. norm_lut (m·k rows) always.
+    hb, queries = _lut_hint(queries, int(meta["lut_rows"]))
+    q = _query_vectors(queries, query_id_col, vec_col)
+    probes = _probe_cells(q, seed_row, nprobe, "ivf_cell")
     qsub = q.select(
         "query_id",
         "qn",
-        F.posexplode(
-            F.expr(
-                f"transform(sequence(0, {m - 1}),"
-                f" s -> slice(qv, s * {sub} + 1, {sub}))"
-            )
-        ).alias("s", "qsv"),
+        F.posexplode(F.expr(_subvectors("qv", m, sub))).alias("s", "qsv"),
     )
     dot_lut = qsub.join(F.broadcast(cents), "s").select(
         "query_id", "qn", "s", "code",
-        dot("qsv", "cv").alias("dp"),
+        F.expr(dot("qsv", "cv")).alias("dp"),
     )
-    norm_lut = cents.select("s", "code", sq_norm("cv").alias("np"))
-    # probes and dot_lut are QUERY-proportional (|q|·nprobe and |q|·m·k
-    # rows) — hinted only while the batch provably fits the broadcast
-    # budget (r14 VERDICT item 3; see `_small_query_batch`). The probes
-    # hint is also what drives dynamic partition pruning on the codes/
-    # scan; an over-cap batch loses the pruning along with the hint,
-    # which is the right trade — a batch that large probes most cells
-    # anyway, and nothing gets pinned into executor memory. norm_lut
-    # stays unconditionally hinted: m·k rows, a codebook constant.
-    hb = _lut_hint(queries, lut_rows_per_query)
+    norm_lut = cents.select("s", "code", F.expr(sq_norm("cv")).alias("np"))
     parts = (
         codes.join(hb(probes), "ivf_cell")
         .join(hb(dot_lut), ["query_id", "s", "code"])
@@ -2142,8 +1899,8 @@ def pq_topk_rerank(
     fetched by scanning the corpus: they are served from the IVF index's
     cell-partitioned ``cells/`` with the same probe-driven dynamic
     partition pruning `ivf_topk_probe` uses, then semi-joined to the
-    shortlist (conditionally broadcast via the `_small_query_batch`
-    budget proof, k_short rows per query).
+    shortlist (broadcast while it fits the budget — see `_lut_hint`;
+    k_short rows per query).
 
     Cross-index invariant (runtime-guarded AND pinned by test): every
     shortlist candidate's cell under the IVF index's quantizer must be
@@ -2155,9 +1912,7 @@ def pq_topk_rerank(
     this function compares the two indexes' persisted quantizer
     fingerprints up front (`_quantizer_fingerprint` — one memoized
     1-row read per distinct build, the `_pq_index_is_residual` cost
-    contract) and raises rather than returning a wrong top-k (r17
-    ADVICE: the guard now lives at runtime, not only in the
-    reachability test).
+    contract) and raises rather than returning a wrong top-k.
 
     Scale shape: both stages are corpus-independent beyond the pruned
     cell files — stage 1 is the documented PQ probe plan, stage 2 reads
@@ -2179,32 +1934,19 @@ def pq_topk_rerank(
             "cannot reach — rebuild both indexes from the same "
             "quantizer (same coarse_centers or same seed convention)"
         )
+    hb, queries = _lut_hint(queries, k_short)
     shortlist = pq_topk_probe(
         spark, pq_index_dir, queries, k=k_short, nprobe=nprobe,
         query_id_col=query_id_col, vec_col=vec_col,
     ).select("query_id", "cand_id")
     cells = spark.read.parquet(os.path.join(ivf_index_dir, "cells"))
     seed_row = spark.read.parquet(os.path.join(ivf_index_dir, "quantizer"))
-    q = queries.select(
-        F.col(query_id_col).alias("query_id"), _as_double(vec_col).alias("qv")
-    ).withColumn("qn", sq_norm("qv"))
-    probes = (
-        q.join(F.broadcast(seed_row))
-        .select(
-            "query_id", "qv", "qn",
-            F.explode(
-                F.slice(_best_cells("qv", "qn"), 1, nprobe)
-            ).alias("probe"),
-        )
-        .select("query_id", "qv", "qn", F.col("probe")["cell"].alias("cell"))
-    )
-    hb = _lut_hint(queries, k_short)
+    q = _query_vectors(queries, query_id_col, vec_col)
+    probes = _probe_cells(q, seed_row, nprobe, "cell", "qv", "qn")
     cand = probes.join(cells, ["cell"]).join(
         hb(shortlist), ["query_id", "cand_id"]
     )
-    cos = dot("qv", "cv") / F.nullif(
-        F.sqrt(F.col("qn") * F.col("cn")), F.lit(0.0)
-    )
+    cos = F.expr(cos_from_norms("qv", "cv", "qn", "cn"))
     scored = cand.withColumn("cos_sim", F.round(cos, 6))
     w = Window.partitionBy("query_id").orderBy(
         F.col("cos_sim").desc(), F.col("cand_id").asc()
@@ -2258,7 +2000,6 @@ def pq_residual_topk_probe(
         F.count(F.lit(1)).alias("lut_rows"),
     ).collect()[0]
     m, sub = int(meta["m"]), int(meta["sub"])
-    lut_rows_per_query = int(meta["lut_rows"])  # m·k codebook entries
     # the persisted quantizer row IS the center table: explode it back to
     # (ivf_cell, ctr) and slice per subspace — tiny (nlist rows), and the
     # single source of truth for every coarse role below
@@ -2268,63 +2009,36 @@ def pq_residual_topk_probe(
     )
     csub = ctrs.select(
         "ivf_cell",
-        F.posexplode(
-            F.expr(
-                f"transform(sequence(0, {m - 1}),"
-                f" s -> slice(ctr, s * {sub} + 1, {sub}))"
-            )
-        ).alias("s", "csv"),
+        F.posexplode(F.expr(_subvectors("ctr", m, sub))).alias("s", "csv"),
     )
     norm_lut = csub.join(cents, "s").select(
         "ivf_cell",
         "s",
         "code",
-        sq_norm("zip_with(csv, cv, (x, y) -> x + y)").alias(
-            "np"
-        ),
+        F.expr(sq_norm("zip_with(csv, cv, (x, y) -> x + y)")).alias("np"),
     )
-    q = queries.select(
-        F.col(query_id_col).alias("query_id"),
-        _as_double(vec_col).alias("qv"),
-        sq_norm(_as_double_sql(vec_col)).alias("qn"),
-    )
-    probes = (
-        q.join(F.broadcast(seed_row))
-        .select(
-            "query_id",
-            F.explode(
-                F.slice(_best_cells("qv", "qn"), 1, nprobe)
-            ).alias("p"),
-        )
-        .select("query_id", F.col("p")["cell"].alias("ivf_cell"))
-    )
+    # probes / dlut_ctr / dlut_res are query-proportional, hinted only
+    # within the budget; norm_lut (nlist·m·k rows, index geometry) always
+    hb, queries = _lut_hint(queries, int(meta["lut_rows"]))
+    q = _query_vectors(queries, query_id_col, vec_col)
+    probes = _probe_cells(q, seed_row, nprobe, "ivf_cell")
     qsub = q.select(
         "query_id",
         "qn",
-        F.posexplode(
-            F.expr(
-                f"transform(sequence(0, {m - 1}),"
-                f" s -> slice(qv, s * {sub} + 1, {sub}))"
-            )
-        ).alias("s", "qsv"),
+        F.posexplode(F.expr(_subvectors("qv", m, sub))).alias("s", "qsv"),
     )
     dlut_res = qsub.join(F.broadcast(cents), "s").select(
         "query_id", "qn", "s", "code",
-        dot("qsv", "cv").alias("dpr"),
+        F.expr(dot("qsv", "cv")).alias("dpr"),
     )
     dlut_ctr = (
         qsub.join(probes, "query_id")
         .join(F.broadcast(csub), ["ivf_cell", "s"])
         .select(
             "query_id", "ivf_cell", "s",
-            dot("qsv", "csv").alias("dpc"),
+            F.expr(dot("qsv", "csv")).alias("dpc"),
         )
     )
-    # probes / dlut_ctr / dlut_res are QUERY-proportional — hinted only
-    # while the batch provably fits the broadcast budget (see
-    # `_small_query_batch`); norm_lut stays unconditionally hinted:
-    # nlist·m·k rows, a constant of the index geometry.
-    hb = _lut_hint(queries, lut_rows_per_query)
     parts = (
         codes.join(hb(probes), "ivf_cell")
         .join(hb(dlut_ctr), ["query_id", "ivf_cell", "s"])

@@ -2672,7 +2672,7 @@ GROUP BY 1, 2
 
 
 def q_dedup_after_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """DELETION-aware incremental dedup (r17 VERDICT item 6) — the case
+    """DELETION-aware incremental dedup — the case
     `incremental_dedup`'s three-way classifier does not cover: when docs
     are REMOVED (takedowns, licence expiry, retention), the carried
     near-dup state is wrong wherever a deleted doc was a component's
@@ -2705,27 +2705,10 @@ def q_dedup_after_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     size, never the corpus), and its pair work is LSH-banded within
     that slice."""
     docs = _t(spark, sf_dir, "documents")
-    # ONE MinHash→LSH→verify pass (r18 VERDICT item 3; was two): the
-    # verified edge list is computed once, lineage-cut (both component
-    # passes and the endpoint restriction reference it), and the
-    # post-delete edge set is derived by RESTRICTION — shingles,
-    # signatures and band keys are per-doc functions, so candidates and
-    # Jaccard over the survivor subset equal the full-corpus values
-    # filtered to surviving endpoints (see `_neardup_edges`); exactness
-    # is pinned by test_dedup_after_delete_equals_global_recompute.
-    # The cut itself: when the edge list fits the session broadcast
-    # budget (the min_label_components rule — broadcast-size ⇒
-    # driver-collectable), materialize it as a local relation via ONE
-    # limit-probed collect; above the budget, localCheckpoint (r19 —
-    # checkpoint CREATION alone measured ~0.9 s of driver-side planning,
-    # so the small-edge case skips it entirely).
-    v = _neardup_edges(docs)
-    _max_local = similarity._broadcast_bytes_threshold(spark) // 16
-    _head = v.limit(_max_local + 1).collect() if _max_local > 0 else None
-    if _head is not None and len(_head) <= _max_local:
-        v = spark.createDataFrame(_head, schema=v.schema)
-    else:
-        v = v.localCheckpoint(eager=False)
+    # ONE MinHash→LSH→verify pass, materialized once: both component passes
+    # reference it, and the post-delete edge set is its restriction to
+    # surviving endpoints (exact — see `_neardup_edges`)
+    v = _neardup_edges(docs).localCheckpoint()
     state = _canon_from_edges(docs, v).select(
         "doc_id", F.col("canonical_id").alias("old_canonical")
     )
@@ -3983,7 +3966,7 @@ def q_embedding_norm_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     + one 1-row aggregate — linear at any scale."""
     e = _t(spark, sf_dir, "embeddings").select(
         F.round(
-            F.sqrt(similarity.sq_norm("cast(embedding as array<double>)")), 6
+            F.sqrt(F.expr(similarity.sq_norm("cast(embedding as array<double>)"))), 6
         ).alias("norm"),
     )
     return e.agg(

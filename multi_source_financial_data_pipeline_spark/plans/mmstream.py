@@ -1828,7 +1828,7 @@ def _stream_ann_scored(spark: SparkSession, sf_dir: str, stream) -> DataFrame:
             F.col("vec_id").alias("query_id"),
             F.col("embedding").cast("array<double>").alias("qv"),
         )
-        .withColumn("qn", similarity.sq_norm("qv"))
+        .withColumn("qn", F.expr(similarity.sq_norm("qv")))
         .withColumn("seeds", F.expr(seeds_lit))
     )
     probes = (
@@ -1836,7 +1836,7 @@ def _stream_ann_scored(spark: SparkSession, sf_dir: str, stream) -> DataFrame:
             "query_id", "qv", "qn",
             F.explode(
                 F.slice(
-                    similarity._best_cells(F.col("qv"), F.col("qn")),
+                    F.expr(similarity._best_cells("qv", "qn")),
                     1, IVF_NPROBE,
                 )
             ).alias("p"),
@@ -1845,9 +1845,7 @@ def _stream_ann_scored(spark: SparkSession, sf_dir: str, stream) -> DataFrame:
             "query_id", "qv", "qn", F.col("p")["cell"].alias("cell")
         )
     )
-    cos = similarity.dot("qv", "cv") / F.nullif(
-        F.sqrt(F.col("qn") * F.col("cn")), F.lit(0.0)
-    )
+    cos = F.expr(similarity.cos_from_norms("qv", "cv", "qn", "cn"))
     return (
         probes.join(cells, ["cell"])
         .filter(F.col("cand_id") != F.col("query_id"))

@@ -1479,16 +1479,14 @@ def ann_serving_growth(ks: tuple[int, ...] = (10, 30)) -> dict:
                 q = queries.select(
                     "query_id",
                     F.col("embedding").cast("array<double>").alias("qv"),
-                ).withColumn("qn", similarity.sq_norm(F.col("qv")))
+                ).withColumn("qn", F.expr(similarity.sq_norm("qv")))
                 probes = (
                     q.join(F.broadcast(seed_row))
                     .select(
                         "query_id",
                         F.explode(
                             F.slice(
-                                similarity._best_cells(
-                                    F.col("qv"), F.col("qn")
-                                ),
+                                F.expr(similarity._best_cells("qv", "qn")),
                                 1,
                                 _ld.IVF_NPROBE,
                             )

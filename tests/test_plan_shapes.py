@@ -620,93 +620,29 @@ def test_pq_probe_lut_broadcast_is_batch_conditional(spark, sf_dir):
         spark.conf.unset("spark.sql.adaptive.autoBroadcastJoinThreshold")
 
 
-def test_broadcast_threshold_parser():
-    """The batch-cap arithmetic rides on parsing the session threshold
-    string; pin the formats Spark actually emits."""
+def test_broadcast_threshold_parser(spark):
+    """The budget is Spark's own parsed threshold: -1 disables it (nothing
+    fits, so every gated caller takes its distributed path, still over a
+    frame materialized once), and a value Spark cannot parse fails loudly
+    at ``conf.set`` — before any gate could read a silent default."""
+    import pytest
+    from pyspark.errors import IllegalArgumentException
+
     from multi_source_financial_data_pipeline_spark.operators.similarity import (
-        _broadcast_bytes_threshold,
+        _materialize,
     )
 
-    class _FakeConf:
-        def __init__(self, v):
-            self._v = v
-
-        def get(self, key, default=None):
-            return self._v if self._v is not None else default
-
-    class _FakeSpark:
-        def __init__(self, v):
-            self.conf = _FakeConf(v)
-
-    for raw, want in [
-        ("10485760", 10485760),
-        ("10MB", 10 << 20),
-        ("10mb", 10 << 20),
-        ("512k", 512 << 10),
-        ("1g", 1 << 30),
-        ("1tb", 1 << 40),
-        ("2pb", 2 << 50),
-        ("100b", 100),
-        ("-1", 0),
-        (None, 10 << 20),
-    ]:
-        assert _broadcast_bytes_threshold(_FakeSpark(raw)) == want, raw
-    # unparseable must be LOUD, not a silent 10MB (r15 review finding)
-    import pytest
-
-    with pytest.raises(ValueError):
-        _broadcast_bytes_threshold(_FakeSpark("10 megabytes"))
-    # fractional mantissa must also be LOUD, not floored to 0 — flooring
-    # '0.5g' would silently disable every batch-conditional hint
-    # (r15 ADVICE)
-    with pytest.raises(ValueError):
-        _broadcast_bytes_threshold(_FakeSpark("0.5g"))
-
-
-def test_small_query_batch_memoizes_count_job(spark, sf_dir, monkeypatch):
-    """r15 VERDICT item 7: a serving loop re-probing the SAME batch plan
-    must pay the bounded LIMIT-capped count job once, not per probe call.
-    First call populates the memo; the second is answered from it — pinned
-    by making any further count() raise."""
-    from pyspark.sql import functions as F
-
-    from multi_source_financial_data_pipeline_spark.operators import similarity
-
-    q = (
-        spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-        .filter(F.col("vec_id") < 10)
-        .select(F.col("vec_id").alias("query_id"), "embedding")
-    )
-    similarity._SMALL_BATCH_MEMO.clear()
-    assert similarity._small_query_batch(q, 128) is True
-    assert len(similarity._SMALL_BATCH_MEMO) == 1
-
-    def _boom(self):
-        raise AssertionError("count() re-ran for a memoized batch plan")
-
-    # patch the CONCRETE class (pyspark 4's classic DataFrame overrides
-    # count; patching the pyspark.sql.DataFrame base would be a no-op)
-    monkeypatch.setattr(type(q), "count", _boom)
-    assert similarity._small_query_batch(q, 128) is True
-    # a different LUT geometry is a different decision: memo must miss
-    # (and with count() patched to raise, that miss must surface)
-    import pytest
-
-    with pytest.raises(AssertionError, match="re-ran"):
-        similarity._small_query_batch(q, 64)
-    # r16 ADVICE: the verdict must not survive unbounded reuse — after
-    # _SMALL_BATCH_RECHECK answered-from-memo calls the entry expires and
-    # the next call must RE-PROVE the budget (here: detonate on count).
-    # One reuse was already spent above, so drain the remainder.
-    entry_budget = similarity._broadcast_bytes_threshold(spark)
-    entry = similarity._SMALL_BATCH_MEMO[(q.semanticHash(), 128, entry_budget)]
-    for _ in range(entry[1]):
-        assert similarity._small_query_batch(q, 128) is True
-    with pytest.raises(AssertionError, match="re-ran"):
-        similarity._small_query_batch(q, 128)
-    # the eager hook empties the memo outright
-    similarity.clear_small_batch_memo()
-    assert similarity._SMALL_BATCH_MEMO == {}
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    assert _materialize(spark.range(3), 16)[0]
+    spark.conf.set(key, "-1")
+    try:
+        fits, frame = _materialize(spark.range(3), 16)
+        assert not fits and frame.count() == 3
+        for raw in ("10 megabytes", "0.5g"):
+            with pytest.raises(IllegalArgumentException):
+                spark.conf.set(key, raw)
+    finally:
+        spark.conf.unset(key)
 
 
 def test_bollinger_rsi_single_exchange(spark, sf_dir):

@@ -3,6 +3,7 @@ co-located joins (plan-shape assertions)."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from multi_source_financial_data_pipeline_spark.operators.skew import salted_agg
@@ -96,10 +97,15 @@ def test_bucketed_join_has_no_exchange(spark, sf_dir, tmp_path):
         spark.sql("DROP TABLE IF EXISTS b_lineitem")
 
 
-def test_min_label_components_transitive_chain(spark, sf_dir):
+@pytest.mark.parametrize("threshold", [None, "-1"], ids=["default", "disabled"])
+def test_min_label_components_transitive_chain(spark, sf_dir, threshold):
     """A–B, B–C with no direct A–C edge: all three must map to A (fixpoint),
     and an unrelated pair D–E must map to D — the one-hop star-merge bug
-    this operator replaces left C pointing at B."""
+    this operator replaces left C pointing at B. Run at the default budget
+    (the union-find fast path) and with the budget disabled, where the
+    distributed min-label loop runs: same labels, and the job group shows
+    the loop's per-round convergence counts beyond the fast path's three
+    jobs (materialize, collect, read back)."""
     from multi_source_financial_data_pipeline_spark.operators.dedup import min_label_components
 
     v = spark.createDataFrame(
@@ -112,12 +118,23 @@ def test_min_label_components_transitive_chain(spark, sf_dir):
     edges = v.unionByName(
         v.select(F.col("id_b").alias("id_a"), F.col("id_a").alias("id_b"))
     ).select(F.col("id_a").alias("id"), F.col("id_b").alias("nb"))
-    got = {
-        r["id"]: r["lbl"] for r in min_label_components(edges).collect()
-    }
+    sc = spark.sparkContext
+    group = f"min-label-{threshold}"
+    if threshold is not None:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)
+    sc.setJobGroup(group, group)
+    try:
+        got = {
+            r["id"]: r["lbl"] for r in min_label_components(edges).collect()
+        }
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
     expected = {1: 1, 2: 1, 3: 1, 10: 10, 11: 10}
     expected.update({20 + i: 20 for i in range(7)})
     assert got == expected
+    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert jobs == 3 if threshold is None else jobs > 3, jobs
 
 
 def test_neardup_canonical_is_fixpoint(spark, sf_dir):

@@ -4,6 +4,8 @@ signal it claims. All assertions are deterministic on the fixed testdata."""
 
 from __future__ import annotations
 
+import pytest
+
 from multi_source_financial_data_pipeline_spark.plans.registry import QUERIES
 
 
@@ -94,6 +96,33 @@ def test_pq_identity_when_every_vector_is_a_seed(spark):
     assert got == want
 
 
+def test_brute_force_topk_quotes_column_names(spark, sf_dir):
+    """Caller-supplied column names reach the SQL-text vector builders
+    backtick-quoted: a vector column and a query-id column whose names hold
+    a hyphen and a space rank exactly like the plainly named call."""
+    from multi_source_financial_data_pipeline_spark.operators import similarity
+    from multi_source_financial_data_pipeline_spark.sources import load_table
+
+    emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+    queries = emb.filter("vec_id < 5").selectExpr(
+        "vec_id AS query_id", "embedding"
+    )
+    want = sorted(
+        map(tuple, similarity.brute_force_topk(emb, queries, k=3).collect())
+    )
+    odd_vec, odd_qid = "emb vec-1", "query id-1"
+    got = similarity.brute_force_topk(
+        emb.withColumnRenamed("embedding", odd_vec),
+        queries.withColumnRenamed("embedding", odd_vec).withColumnRenamed(
+            "query_id", odd_qid
+        ),
+        k=3,
+        vec_col=odd_vec,
+        query_id_col=odd_qid,
+    )
+    assert sorted(map(tuple, got.collect())) == want and want
+
+
 def test_ivfpq_full_probe_equals_pq(spark):
     """With nprobe == nlist the coarse level restricts nothing, so IVF-PQ
     must produce EXACTLY pq_adc_topk's ranking — the composition's
@@ -131,14 +160,14 @@ def test_ivfpq_full_probe_equals_pq(spark):
     q = queries.select(
         F.col("query_id"),
         F.col("embedding").cast("array<double>").alias("qv"),
-    ).withColumn("qn", similarity.sq_norm(F.col("qv")))
+    ).withColumn("qn", F.expr(similarity.sq_norm("qv")))
     probes = {
         (r["query_id"], r["p"]["cell"])
         for r in q.join(F.broadcast(seed_row))
         .select(
             "query_id",
             F.explode(
-                F.slice(similarity._best_cells(F.col("qv"), F.col("qn")), 1, 2)
+                F.slice(F.expr(similarity._best_cells("qv", "qn")), 1, 2)
             ).alias("p"),
         )
         .collect()
@@ -564,14 +593,14 @@ def test_ivfpq_residual_identity_at_full_budget(spark):
     q = queries.select(
         F.col("query_id"),
         F.col("embedding").cast("array<double>").alias("qv"),
-    ).withColumn("qn", similarity.sq_norm(F.col("qv")))
+    ).withColumn("qn", F.expr(similarity.sq_norm("qv")))
     probes = {
         (r["query_id"], r["p"]["cell"])
         for r in q.join(F.broadcast(seed_row))
         .select(
             "query_id",
             F.explode(
-                F.slice(similarity._best_cells(F.col("qv"), F.col("qn")), 1, 2)
+                F.slice(F.expr(similarity._best_cells("qv", "qn")), 1, 2)
             ).alias("p"),
         )
         .collect()
@@ -1111,20 +1140,18 @@ def test_ivf_index_refined_centers_probe_consistency(spark, tmp_path):
     )
     q = queries.select(
         "query_id", F.col("embedding").cast("array<double>").alias("qv")
-    ).withColumn("qn", similarity.sq_norm(F.col("qv")))
+    ).withColumn("qn", F.expr(similarity.sq_norm("qv")))
     probes = (
         q.join(F.broadcast(centers_row))
         .select(
             "query_id", "qv", "qn",
             F.explode(
-                F.slice(similarity._best_cells(F.col("qv"), F.col("qn")), 1, 2)
+                F.slice(F.expr(similarity._best_cells("qv", "qn")), 1, 2)
             ).alias("p"),
         )
         .select("query_id", "qv", "qn", F.col("p")["cell"].alias("cell"))
     )
-    cos = similarity.dot(F.col("qv"), F.col("cv")) / F.nullif(
-        F.sqrt(F.col("qn") * F.col("cn")), F.lit(0.0)
-    )
+    cos = F.expr(similarity.cos_from_norms("qv", "cv", "qn", "cn"))
     w = Window.partitionBy("query_id").orderBy(
         F.col("cos_sim").desc(), F.col("cand_id").asc()
     )
@@ -1511,8 +1538,31 @@ def test_pq_rerank_rejects_divergent_quantizers_at_runtime(spark, tmp_path):
     assert key in similarity._QUANTIZER_FP_MEMO
 
 
-def test_dedup_after_delete_equals_global_recompute(spark, sf_dir):
-    """The deletion-repair theorem (r17 VERDICT item 6): verified
+def _computed_stages(sc, group: str) -> list[tuple[int, int, int]]:
+    """(tasks, input bytes, shuffle-write bytes) of every stage the job
+    group ran; a skipped stage (its shuffle output reused) completes no
+    tasks and is left out."""
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    tracker, store = sc.statusTracker(), sc._jsc.sc().statusStore()
+    stage_ids = {
+        sid
+        for job in tracker.getJobIdsForGroup(group)
+        for sid in tracker.getJobInfo(job).stageIds
+    }
+    out = []
+    for sid in sorted(stage_ids):
+        info = tracker.getStageInfo(sid)
+        if info is not None and info.numCompletedTasks > 0:
+            data = store.lastStageAttempt(sid)
+            out.append((info.numTasks, data.inputBytes(), data.shuffleWriteBytes()))
+    return out
+
+
+@pytest.mark.parametrize(
+    "above_budget", [False, True], ids=["default", "above_budget"]
+)
+def test_dedup_after_delete_equals_global_recompute(spark, sf_dir, above_budget):
+    """The deletion-repair theorem: verified
     near-dup edges never cross component boundaries, so deleting docs
     only REFINES components — and therefore the query's component-LOCAL
     recluster of touched survivors must equal a GLOBAL from-scratch
@@ -1522,16 +1572,43 @@ def test_dedup_after_delete_equals_global_recompute(spark, sf_dir):
     Spark-vs-Spark half) plus the audit identities: every touched
     member is accounted for (Σ n_members = surviving touched docs;
     retired rows carry NULL canonical and zero members), and every
-    emitted action is consistent with its row."""
+    emitted action is consistent with its row.
+
+    The above-budget case sets the broadcast threshold one edge below the
+    corpus' verified-edge count, so min_label_components takes its
+    distributed loop, and checks that the verified-edge chain (MinHash →
+    LSH → Jaccard verify) runs once: every shuffle-map stage of a
+    reference run of the chain alone (same conf; matched by tasks, input
+    bytes and shuffle-write bytes) is computed exactly once in the job
+    group that builds and collects the query."""
+    import collections
+
     from pyspark.sql import functions as F
 
     from multi_source_financial_data_pipeline_spark.plans import llmdata
-    from multi_source_financial_data_pipeline_spark.plans.registry import QUERIES
     from multi_source_financial_data_pipeline_spark.sources import load_table
 
-    out = QUERIES["dedup_after_delete"].fn(spark, sf_dir).toPandas()
-
+    sc = spark.sparkContext
     docs = load_table(spark, sf_dir, "documents")
+    try:
+        if above_budget:
+            n_edges = llmdata._neardup_edges(docs).count()
+            assert n_edges >= 2
+            spark.conf.set(
+                "spark.sql.autoBroadcastJoinThreshold", str(16 * (n_edges - 1))
+            )
+            sc.setJobGroup("edge-chain", "edge-chain")
+            llmdata._neardup_edges(docs).collect()
+            sc.setJobGroup("dedup-after-delete", "dedup-after-delete")
+        out = QUERIES["dedup_after_delete"].fn(spark, sf_dir).toPandas()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+    if above_budget:
+        chain = [st for st in _computed_stages(sc, "edge-chain") if st[2] > 0]
+        ran = collections.Counter(_computed_stages(sc, "dedup-after-delete"))
+        assert chain and all(ran[st] == 1 for st in chain), (chain, ran)
+
     h = F.conv(
         F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8), 16, 10
     ).cast("bigint")
